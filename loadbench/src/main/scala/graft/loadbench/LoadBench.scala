@@ -25,13 +25,15 @@ object LoadBench {
   /** Operating day of every generated input. */
   val Date: LocalDate = LocalDate.parse("2026-03-12")
 
-  /** Loads each run makes at least, so a median always has three. */
-  val MinLoads = 3
+  /** Timed loads each run makes at least. */
+  val MinLoads = 2
 
   /** Untimed, checked loads after the first, so the timed ones run on
-    * compiled code.
+    * compiled code. Three, because HotSpot still compiles 5-8 s of CPU
+    * per load through the fourth load and less after it, and because
+    * `rerun_day` first runs its dedup path on the second load.
     */
-  val WarmupLoads = 2
+  val WarmupLoads = 3
 
   /** Input generation is repeated this often, for a median set-up time
     * and a determinism check on the ledgers.
@@ -71,8 +73,8 @@ object LoadBench {
       .map(_.replaceAll("[^0-9]", "").toDouble / 1024).getOrElse(0.0)
   }
 
-  /** `HfpLoadJob.main`'s session: local[cores], one shuffle partition per
-    * core, UTC.
+  /** `HfpLoadJob.main`'s session settings: local[cores], one shuffle
+    * partition per core, UTC.
     */
   def session(cores: Int, work: Path): SparkSession = {
     val spark = SparkSession.builder()
@@ -102,7 +104,11 @@ object LoadBench {
     System.setProperty("derby.system.home", work.resolve("derby").toString)
     System.setProperty("derby.stream.error.file", work.resolve("derby.log").toString)
 
-    val cores = Runtime.getRuntime.availableProcessors
+    // one core fewer than the machine has: the JIT compiler and GC
+    // threads take about a third of the process CPU through the timed
+    // loads, and with a task thread on every core they would be
+    // time-sliced against the tasks
+    val cores = math.max(1, Runtime.getRuntime.availableProcessors - 1)
     val t0 = System.nanoTime()
     val spark = session(cores, work)
     val sessionS = (System.nanoTime() - t0) / 1e9
@@ -189,15 +195,18 @@ object LoadBench {
       gens.map(g => f"${g._3}%.2f").mkString("/") + f" s, sink, first load and warm-up " +
       f"$prepS%.2f s (first load $firstLoadS%.2f s), ${ledger.lines} lines, ${ledger.bytes} bytes")
 
-    // measured loop: one load at a time, each checked, until `seconds`
+    // measured loop: one load at a time, each checked, until `seconds`;
+    // whether a load is the last is decided when it ends, so the last
+    // one always gets the full check
     val loads = mutable.ArrayBuffer[Double]()
     val cpus = mutable.ArrayBuffer[Double]()
     val loopStart = System.nanoTime()
     def elapsed = (System.nanoTime() - loopStart) / 1e9
+    var last = false
     def more = loads.size < MinLoads && attempted < 2 * MinLoads + WarmupLoads + 1 ||
-      elapsed < seconds && failed == 0
+      !last && failed == 0
     while (more)
-      oneLoad(full = loads.size + 1 >= MinLoads && elapsed >= seconds)
+      oneLoad(full = { last = loads.size + 1 >= MinLoads && elapsed >= seconds; last })
         .foreach { case (s, cpu) => loads += s; cpus += cpu }
     val loadS = if (loads.isEmpty) Double.NaN else median(loads.toSeq)
     val endToEnd = Seq(
